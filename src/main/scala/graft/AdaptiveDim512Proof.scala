@@ -75,7 +75,7 @@ object AdaptiveDim512Proof {
     // the plan the chooser took must be the brute-force probed scan — no
     // sub-graph rebuild operator anywhere in it
     val plan = ann.queryExecution.executedPlan.toString
-    require(!plan.contains("MapGroups") && !plan.contains("CoGroup"),
+    require(!plan.contains("shufflepartitionidpassthrough"),
       "decay tier must have selected the exact-probed plan")
 
     val dist = graft.functions.Distances.metric(index.meta.metric)

@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 
 import graft.functions.{Distances, Levels}
@@ -157,9 +158,9 @@ case class HnswIndex(nodes: DataFrame, edges: DataFrame, meta: IndexMeta,
                      calibration: Seq[CalCurve] = Nil)
 
 /** Tagged-union row shipping nodes (kind 0), edges (kind 1) and replicated
-  * queries (kind 2) to each shard in ONE shuffle — the carrier of
-  * [[Hnsw.annQueryLarge]]'s driver-free query path. Sorted arrival by
-  * (kind, id) lets one pass build the sub-graph and then stream queries.
+  * queries (kind 2) to each shard in ONE shuffle — the carrier of every
+  * graph-traversal query. Sorted arrival by (kind, id) lets one pass build
+  * the sub-graph and then stream queries.
   */
 case class AnnUnionRow(pid: Int, kind: Int, id: Long, vector: Array[Float],
                        level: Int, tombstone: Boolean, layer: Int, dst: Long)
@@ -171,7 +172,7 @@ case class AnnUnionRow(pid: Int, kind: Int, id: Long, vector: Array[Float],
   * (`hsnw_trial.py:197-265`, single RLock) cannot parallelize, so the build
   * partitions rows deterministically by `id % P`, builds an independent
   * sub-graph per partition with [[LocalHnsw]] inside `mapPartitions` (no
-  * shuffle beyond the initial hash partition), and answers queries by
+  * shuffle beyond the pid-exact shard exchange), and answers queries by
   * searching every sub-graph in parallel and merging with a global top-k —
   * shuffle volume O(queries × k × P), never O(n). Levels are a pure
   * function of id ([[Levels]]), so the build is reproducible on any cluster
@@ -558,13 +559,11 @@ object Hnsw {
       // throwaway indexes should index.nodes.unpersist() when done
       .cache()
 
-    // One group per pid (an explicit groupByKey, NOT repartition(p, pid):
-    // hash partitioning may co-locate several pids in one task). Rows arrive
-    // sorted by id, so insertion order — and therefore the graph — is a pure
-    // function of (input, params).
-    val edges: Dataset[EdgeRow] = nodes
-      .groupByKey(_.pid)
-      .flatMapSortedGroups(col("id")) { (pid, rows) =>
+    // one sub-graph per pid through the pid-exact exchange (shard p builds
+    // in task p mod P). Rows arrive sorted by id, so insertion order — and
+    // therefore the graph — is a pure function of (input, params).
+    val edges: Dataset[EdgeRow] =
+      perShard(nodes, params.numPartitions, (r: NodeRow) => r.pid, col("id")) { (pid, rows) =>
         val idx = new LocalHnsw(params.dim, params.m, params.maxM0Resolved,
           params.efConstruction, params.metric, params.int8Screen)
         rows.foreach(r => idx.add(r.id, r.vector, r.level))
@@ -960,11 +959,13 @@ object Hnsw {
     * (bit-identical, the index scanned once however large the file),
     * unless the caller passed `spillPath` to explicitly keep the chunked
     * durable-parquet form. Driver memory never holds more than one chunk
-    * either way (SURVEY.md §3.1). The node and edge
-    * tables are cogrouped by pid so each task rebuilds exactly one
-    * sub-graph. Tombstones are skipped during traversal (not by widening
-    * ef) — search cost is independent of the total delete count.
-    * Output: (qid, rank, id, dist).
+    * either way (SURVEY.md §3.1). An in-memory batch (optimized plan a
+    * `LocalRelation`, e.g. `Seq.toDF`) is sized and read off the plan with
+    * no job; other sources run a qid-only probe, then one `collect`. The
+    * sub-graphs rebuild in parallel through the pid-exact shard exchange
+    * ([[perShard]]): 3 jobs at the action on a loaded index. Tombstones are
+    * skipped during traversal (not by widening ef) — search cost is
+    * independent of the total delete count. Output: (qid, rank, id, dist).
     *
     * Recall tuning: `ef` must grow with the per-partition sub-graph size
     * (n / numPartitions), not with n — at a fixed ef a 10× larger
@@ -985,55 +986,40 @@ object Hnsw {
     // spec-asserted) is strictly better there, so it is selected
     // automatically; only an explicit spillPath keeps the chunked form
     // (the caller asked for durable per-chunk parquet on a shared FS).
-    // The decision itself is a qid-only limit+count probe — it must NOT
+    // An in-memory batch is collected job-free off its LocalRelation; any
+    // other source is sized by a qid-only limit+count probe — it must NOT
     // pull a full vector chunk to the driver just to abandon it.
-    if (spillPath.isEmpty &&
-        queries.select(col("qid")).limit(queryBatchSize + 1).count() > queryBatchSize) {
+    val typed = queries.select(col("qid").cast("long"), col("vector").cast("array<float>"))
+      .as[(Long, Array[Float])]
+    val local = Option.when(typed.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])(
+      typed.collect())
+    if (spillPath.isEmpty && local.fold(
+        queries.select(col("qid")).limit(queryBatchSize + 1).count())(_.length.toLong) > queryBatchSize) {
       largeDispatches.incrementAndGet()
       return annQueryLarge(index, queries, k, ef)
     }
-    val grouped = queries.select(col("qid").cast("long"), col("vector").cast("array<float>"))
-      .as[(Long, Array[Float])].toLocalIterator().asScala.grouped(queryBatchSize)
-    val first = if (grouped.hasNext) grouped.next().toArray else Array.empty[(Long, Array[Float])]
-    val perPart =
-      if (!grouped.hasNext) spillPath match {
-        // spill applies to the single-chunk case too (uniform contract:
-        // the directory always reflects THIS query's candidates)
-        case Some(path) =>
-          perPartFor(index, first, k, ef)._1.write.mode("overwrite").parquet(path)
-          spark.read.parquet(path)
-        case None => perPartFor(index, first, k, ef)._1 // one chunk: fully lazy
-      }
-      else {
-        // each chunk is searched eagerly and its broadcast destroyed before
-        // the next chunk is collected — bounded driver memory regardless of
-        // query-file size; qids are disjoint across chunks so the global
-        // rank window below stays correct. Chunk materialization:
-        //   - spillPath (a shared-FS dir on a real cluster): durable parquet
-        //     appends — survives executor loss. The caller owns the dir for
-        //     the LIFETIME of the returned DataFrame: a second annQuery on
-        //     the same path overwrites it under an uncollected result;
-        //   - default localCheckpoint: executor-local blocks — fast, but an
-        //     executor loss mid-query fails the job (retry from the file).
-        var acc = List.empty[DataFrame]
-        var chunk = first
-        var more = true
-        var firstChunk = true
-        while (more) {
-          val (df, qB) = perPartFor(index, chunk, k, ef)
-          spillPath match {
-            case Some(path) =>
-              df.write.mode(if (firstChunk) "overwrite" else "append").parquet(path)
-            case None =>
-              acc ::= graft.operators.Checkpoints.tracked(df)
+    spillPath match {
+      // one chunk (the size check above): fully lazy
+      case None => rankTopK(perPartFor(index, local.getOrElse(typed.collect()), k, ef)._1, k)
+      case Some(path) =>
+        // each chunk is searched eagerly into durable parquet (a shared-FS
+        // dir on a real cluster: survives executor loss) and its broadcast
+        // destroyed before the next chunk is collected — bounded driver
+        // memory regardless of query-file size; qids are disjoint across
+        // chunks so the global rank merge stays correct. The caller owns
+        // the dir for the LIFETIME of the returned DataFrame: a second
+        // annQuery on the same path overwrites it under an uncollected
+        // result. An empty query set still writes (and reads) one chunk.
+        val chunks = local.fold(typed.toLocalIterator().asScala)(_.iterator)
+          .grouped(queryBatchSize).map(_.toArray)
+        (if (chunks.hasNext) chunks else Iterator(Array.empty[(Long, Array[Float])]))
+          .zipWithIndex.foreach { case (chunk, i) =>
+            val (df, qB) = perPartFor(index, chunk, k, ef)
+            df.write.mode(if (i == 0) "overwrite" else "append").parquet(path)
+            qB.destroy()
           }
-          qB.destroy()
-          firstChunk = false
-          if (grouped.hasNext) chunk = grouped.next().toArray else more = false
-        }
-        spillPath.map(spark.read.parquet(_)).getOrElse(acc.reduce(_ union _))
-      }
-    rankTopK(perPart, k)
+        rankTopK(spark.read.parquet(path), k)
+    }
   }
 
   /** Distributed batch ANN with NO driver round-trip — the large-query-set
@@ -1041,10 +1027,10 @@ object Hnsw {
     * in bounded chunks and re-scans the index per chunk). Here the query
     * table stays distributed: each query row is replicated to every shard
     * (`explode(sequence(0, P−1))`), unioned with the node and edge tables
-    * into one tagged stream, and shuffled ONCE by pid. Each task receives
-    * its shard sorted by (kind, id) — nodes first, then edges, then
-    * queries — so it rebuilds exactly one sub-graph and then streams the
-    * replicated queries through it; the global per-query top-k is the same
+    * into one tagged stream, and shuffled ONCE through the pid-exact shard
+    * exchange. Each shard arrives sorted by (kind, id) — nodes first, then
+    * edges, then queries — so its sub-graph is rebuilt once and the
+    * replicated queries stream through it; the global per-query top-k is the same
     * bounded-heap partial aggregate as [[annQuery]]. Shuffle volume
     * O(nodes + edges + q·P) in, O(q·k·P) out; driver memory O(1); the
     * index is scanned exactly once however large the query set is.
@@ -2045,59 +2031,11 @@ object Hnsw {
     else nSub * probedUnion
 
   /** Shared engine of [[annQueryLarge]]/[[annQueryRouted]]: queries arrive
-    * already replicated to their target shards as (pid, qid, vector); union
-    * with the node/edge tables into one tagged stream, shuffle ONCE by pid,
-    * rebuild each sub-graph from its sorted stream, stream the queries
-    * through it, global top-k merge.
+    * already replicated to their target shards as (pid, qid, vector) and
+    * ride the shard exchange behind each shard's graph rows.
     */
-  private def unionSearch(index: HnswIndex, queriesWithPid: DataFrame, k: Int, ef: Int): DataFrame = {
-    val spark = index.nodes.sparkSession
-    import spark.implicits._
-    val m = index.meta
-    val efUsed = efBudget(m, k, ef)
-    val nodesU = index.nodes.select(
-      col("pid").cast("int").as("pid"), lit(0).as("kind"), col("id").cast("long").as("id"),
-      col("vector").cast("array<float>").as("vector"), col("level"), col("tombstone"),
-      lit(0).as("layer"), lit(0L).as("dst"))
-    val edgesU = index.edges.select(
-      col("pid").cast("int").as("pid"), lit(1).as("kind"), col("src").cast("long").as("id"),
-      lit(null).cast("array<float>").as("vector"), lit(0).as("level"), lit(false).as("tombstone"),
-      col("layer"), col("dst"))
-    val queriesU = queriesWithPid
-      .select(col("pid").cast("int").as("pid"), lit(2).as("kind"),
-        col("qid").cast("long").as("id"), col("vector").cast("array<float>").as("vector"),
-        lit(0).as("level"), lit(false).as("tombstone"),
-        lit(0).as("layer"), lit(0L).as("dst"))
-    val perPart = nodesU.union(edgesU).union(queriesU).as[AnnUnionRow]
-      .groupByKey(_.pid)
-      .flatMapSortedGroups(col("kind"), col("id")) { (_, rows) =>
-        val it = rows.buffered
-        val tomb = scala.collection.mutable.HashSet.empty[Long]
-        // lazy slices of the sorted stream: fromRows consumes nodes fully
-        // before touching edges, matching the (kind, id) sort order
-        val nodeRows = new Iterator[(Long, Array[Float], Int)] {
-          def hasNext: Boolean = it.hasNext && it.head.kind == 0
-          def next(): (Long, Array[Float], Int) = {
-            val n = it.next()
-            if (n.tombstone) tomb += n.id
-            (n.id, n.vector, n.level)
-          }
-        }
-        val edgeRows = new Iterator[(Long, Int, Long)] {
-          def hasNext: Boolean = it.hasNext && it.head.kind == 1
-          def next(): (Long, Int, Long) = { val e = it.next(); (e.id, e.layer, e.dst) }
-        }
-        val idx = LocalHnsw.fromRows(m.dim, m.m, m.max_m0, m.ef_construction, m.metric,
-          nodeRows, edgeRows)
-        if (idx.size == 0) Iterator.empty
-        else it.flatMap { q =>
-          idx.search(q.vector, k, efUsed, tomb.contains)
-            .iterator.map { case (id, dist) => (q.id, id, dist) }
-        }
-      }
-      .toDF("qid", "id", "dist")
-    rankTopK(perPart, k)
-  }
+  private def unionSearch(index: HnswIndex, queriesWithPid: DataFrame, k: Int, ef: Int): DataFrame =
+    rankTopK(searchShards(index, Some(queriesWithPid), k, ef)(_.map(q => (q.id, q.vector))), k)
 
   /** Filtered ANN — top-k restricted to an allowed id set (the standard
     * attribute-predicate search of vector engines: "nearest neighbors among
@@ -2284,37 +2222,91 @@ object Hnsw {
       .select(col("qid"), (col("pos") + 1).cast("int").as("rank"),
         col("entry.id").as("id"), col("entry.dist").as("dist"))
 
-  /** Per-partition sub-graph search for one broadcast chunk: cogroup nodes
-    * and edges by pid, rebuild each sub-graph, emit (qid, id, dist)
-    * candidates (k per query per partition).
+  /** Per-partition sub-graph search for one broadcast chunk: (qid, id, dist)
+    * candidates, k per query per partition.
     */
   private def perPartFor(index: HnswIndex, qArr: Array[(Long, Array[Float])], k: Int, ef: Int):
       (DataFrame, org.apache.spark.broadcast.Broadcast[Array[(Long, Array[Float])]]) = {
+    val qB = index.nodes.sparkSession.sparkContext.broadcast(qArr)
+    (searchShards(index, None, k, ef)(_ => qB.value.iterator), qB)
+  }
+
+  /** Sub-graph search over the shard exchange ([[perShard]]): each shard's
+    * nodes (kind 0), edges (kind 1) and the `replicated` (pid, qid, vector)
+    * queries aimed at it (kind 2) arrive sorted by (kind, id). The shard
+    * reader rebuilds the graph from the node and edge rows, then searches
+    * every query `queriesOf` draws from the rest: (qid, id, dist)
+    * candidates, k per query per shard.
+    */
+  private def searchShards(index: HnswIndex, replicated: Option[DataFrame], k: Int, ef: Int)(
+      queriesOf: Iterator[AnnUnionRow] => Iterator[(Long, Array[Float])]): DataFrame = {
     val spark = index.nodes.sparkSession
     import spark.implicits._
     val m = index.meta
     val efUsed = efBudget(m, k, ef)
-    val nodesDs = index.nodes.select("id", "vector", "level", "tombstone", "pid").as[NodeRow]
-      .groupByKey(_.pid)
-    val edgesDs = index.edges.select("pid", "src", "layer", "dst").as[EdgeRow]
-      .groupByKey(_.pid)
-    val qB = spark.sparkContext.broadcast(qArr)
-    val df = nodesDs.cogroup(edgesDs) { (pid, nodeIt, edgeIt) =>
-      val nodeArr = nodeIt.toArray
-      if (nodeArr.isEmpty) Iterator.empty
-      else {
-        val tomb = nodeArr.iterator.filter(_.tombstone).map(_.id).toSet
-        val idx = LocalHnsw.fromRows(m.dim, m.m, m.max_m0, m.ef_construction, m.metric,
-          nodeArr.iterator.map(n => (n.id, n.vector, n.level)),
-          edgeIt.map(e => (e.src, e.layer, e.dst)))
-        qB.value.iterator.flatMap { case (qid, qv) =>
-          idx.search(qv, k, efUsed, tomb.contains)
-            .iterator.map { case (id, dist) => (qid, id, dist) }
+    val nodesU = index.nodes.select(
+      col("pid").cast("int").as("pid"), lit(0).as("kind"), col("id").cast("long").as("id"),
+      col("vector").cast("array<float>").as("vector"), col("level"), col("tombstone"),
+      lit(0).as("layer"), lit(0L).as("dst"))
+    val edgesU = index.edges.select(
+      col("pid").cast("int").as("pid"), lit(1).as("kind"), col("src").cast("long").as("id"),
+      lit(null).cast("array<float>").as("vector"), lit(0).as("level"), lit(false).as("tombstone"),
+      col("layer"), col("dst"))
+    val queriesU = replicated.map(_.select(col("pid").cast("int").as("pid"), lit(2).as("kind"),
+      col("qid").cast("long").as("id"), col("vector").cast("array<float>").as("vector"),
+      lit(0).as("level"), lit(false).as("tombstone"), lit(0).as("layer"), lit(0L).as("dst")))
+    val rows = (Seq(nodesU, edgesU) ++ queriesU).reduce(_ union _).as[AnnUnionRow]
+    perShard(rows, math.max(1, m.num_partitions), (r: AnnUnionRow) => r.pid,
+        col("kind"), col("id")) { (_, shard) =>
+      val it = shard.buffered
+      val tomb = scala.collection.mutable.HashSet.empty[Long]
+      // lazy slices of the sorted stream: fromRows consumes nodes fully
+      // before touching edges, matching the (kind, id) sort order
+      val nodeRows = new Iterator[(Long, Array[Float], Int)] {
+        def hasNext: Boolean = it.hasNext && it.head.kind == 0
+        def next(): (Long, Array[Float], Int) = {
+          val n = it.next()
+          if (n.tombstone) tomb += n.id
+          (n.id, n.vector, n.level)
         }
       }
+      val edgeRows = new Iterator[(Long, Int, Long)] {
+        def hasNext: Boolean = it.hasNext && it.head.kind == 1
+        def next(): (Long, Int, Long) = { val e = it.next(); (e.id, e.layer, e.dst) }
+      }
+      val idx = LocalHnsw.fromRows(m.dim, m.m, m.max_m0, m.ef_construction, m.metric,
+        nodeRows, edgeRows)
+      if (idx.size == 0) Iterator.empty
+      else queriesOf(it).flatMap { case (qid, qv) =>
+        idx.search(qv, k, efUsed, tomb.contains).iterator.map { case (id, dist) => (qid, id, dist) }
+      }
     }.toDF("qid", "id", "dist")
-    (df, qB)
   }
+
+  /** The pid-exact shard exchange behind every sub-graph build and search:
+    * `repartitionById` sends shard `pid` to task `pid mod p`. The partition
+    * count is the caller's, so AQE never coalesces shards into one task,
+    * and no two home pids share a task (a hash shuffle on pid does both);
+    * appended shards (`offset + home`, offset a multiple of P) ride their
+    * home shard's task. `f` sees one shard at a time, its rows sorted by
+    * `order`, so results never depend on the modulus; rows it leaves
+    * unread are skipped.
+    */
+  private def perShard[T: Encoder, U: Encoder](rows: Dataset[T], p: Int, pidOf: T => Int,
+      order: Column*)(f: (Int, Iterator[T]) => Iterator[U]): Dataset[U] =
+    rows.repartitionById(p, pmod(col("pid"), lit(p)))
+      .sortWithinPartitions(col("pid") +: order: _*)
+      .mapPartitions { part =>
+        val in = part.buffered
+        Iterator.continually(in).takeWhile(_.hasNext).flatMap { _ =>
+          val pid = pidOf(in.head)
+          val shard = new Iterator[T] {
+            def hasNext: Boolean = in.hasNext && pidOf(in.head) == pid
+            def next(): T = in.next()
+          }
+          f(pid, shard) ++ { shard.foreach(_ => ()); Iterator.empty }
+        }
+      }
 
   // ---- mutation / lifecycle (reference M1/B7) ----
 

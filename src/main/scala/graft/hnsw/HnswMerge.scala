@@ -30,9 +30,9 @@ import graft.operators.Ivf
   * endpoints' shards; foreign endpoints carried as tombstoned GHOST copies
   * so search routes through them but only home nodes surface — the same
   * route-through-but-exclude mechanism tombstone deletes use). `annQuery`
-  * cogroups by pid as usual, so no task ever rebuilds more than one shard
-  * (~n/numShards home nodes + its ghost fringe) — the merged graph is
-  * never a single-task rebuild. Duplication cost is bounded: ≤ 2× edges,
+  * ships shard p to task p mod numShards (the pid-exact exchange), so each
+  * task rebuilds one shard (~n/numShards home nodes + its ghost fringe) —
+  * the merged graph is never a single-task rebuild. Duplication cost is bounded: ≤ 2× edges,
   * and each node ghosts into at most min(degree, numShards−1) foreign
   * shards — the knob trades query parallelism against ghost-fringe
   * storage.

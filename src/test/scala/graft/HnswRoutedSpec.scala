@@ -491,7 +491,7 @@ class HnswRoutedSpec extends SparkSpec {
     assert(!Hnsw.traversalDecays(idx.meta, k = 1, ef = 50))
     val dec = Hnsw.annQueryAdaptive(idx, q, k = 1, ef = 2)
     val decPlan = dec.queryExecution.executedPlan.toString
-    assert(!decPlan.contains("MapGroups") && !decPlan.contains("CoGroup"),
+    assert(!SparkSpec.rebuildsSubGraphs(decPlan),
       "decay regime must not rebuild sub-graphs — brute force within probed shards")
     // 600 uniform queries probing C/4 cells cover the union per query —
     // the scan side of the decision (exact-scan when the union reaches
@@ -518,7 +518,7 @@ class HnswRoutedSpec extends SparkSpec {
     // rebuild operator present), same decision inputs otherwise
     val trav = Hnsw.annQueryAdaptive(idx, q, k = 1, ef = 50)
     val travPlan = trav.queryExecution.executedPlan.toString
-    assert(travPlan.contains("MapGroups") || travPlan.contains("CoGroup"),
+    assert(SparkSpec.rebuildsSubGraphs(travPlan),
       "non-decayed regime must keep the graph traversal")
     idx.nodes.unpersist()
   }

@@ -10,6 +10,12 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 }
 
 object SparkSpec {
+  /** Whether a physical plan rebuilds HNSW sub-graphs: every rebuild site
+    * runs behind the pid-exact shard exchange (`repartitionById`), whose
+    * partitioning prints as `shufflepartitionidpassthrough(...)`.
+    */
+  def rebuildsSubGraphs(plan: String): Boolean = plan.contains("shufflepartitionidpassthrough")
+
   lazy val session: SparkSession = SparkSession.builder()
     .master("local[4]")
     .appName("graft-test")
